@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 /** Plan-quality audit: prints physical plans for representative queries so
@@ -298,28 +299,37 @@ object PlanAudit {
 
     // ----- round 7 (optimization round) seams -----
 
-    // PageRank superstep (round 7): ONE action per superstep — the dangling
-    // mass is a broadcast 1-row scalar inside the plan (no separate driver
-    // agg job) and the fixed no-in-edge rows arrive by UNION, so expect NO
-    // verts⋈contribs join/Exchange anywhere: one rank-side shuffle into the
-    // cached src edge layout, one partial/final dst aggregate, one union.
-    // Broadcast disabled so the big-graph join shape is shown.
+    // PageRank superstep: ONE action per superstep — the previous
+    // superstep's dangling mass arrives as a driver literal inside the
+    // teleport term (observed on that superstep's own checkpoint), so expect
+    // NO BroadcastNestedLoopJoin and NO SinglePartition exchange; the fixed
+    // no-in-edge rows arrive by UNION, so NO verts⋈contribs join/Exchange
+    // either: one rank-side shuffle into the cached src edge layout, one
+    // partial/final (dst, dangling) aggregate, one union. Broadcast disabled
+    // so the big-graph join shape is shown.
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val prEdges = SparkEntry.derivedEdges(spark, dir).toDF().persist()
-    val prDeg = prEdges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val prW = prEdges.join(prDeg, "src")
-      .select(col("src"), col("dst"), (lit(1.0) / col("deg")).as("w"))
-      .repartition(col("src")).persist()
-    prW.count()
     val prVerts = SparkEntry.derivedVerts(spark, dir)
-    val prRanks = prVerts.withColumn("rank", lit(0.001))
-    val prDangling = prVerts.join(prEdges.select(col("src").as("id")).distinct(),
-      Seq("id"), "left_anti")
-    val prNoIn = prVerts.join(prEdges.select(col("dst").as("id")).distinct(),
-      Seq("id"), "left_anti")
-    show("pagerank-superstep-one-action")(
-      graft.algo.PageRank.superstepPlan(prRanks, prW, prNoIn, prDangling,
-        danglingCount = 1L, damping = 0.85, n = 997L))
+    val prFlags = graft.algo.PageRank.vertexFlags(prEdges, prVerts)
+      .localCheckpoint(true)
+    val prW = graft.algo.PageRank.weightedEdges(prEdges, prFlags, prEdges.count())
+    val prDangling = prFlags.select(col("id"), col("deg").isNull.as("dangling"))
+    val prStep = graft.algo.PageRank.superstepPlan(
+      prDangling.withColumn("rank", lit(0.001)), prW,
+      prFlags.filter(!col("hasIn")).select(col("id"), col("deg").isNull.as("dangling")),
+      teleport = lit(0.00015), damping = 0.85)
+    show("pagerank-superstep-one-action")(prStep)
+    // the superstep's own operators, without the cached layout's one-time
+    // plan (at a fixture-sized edge count that layout is one partition, so
+    // its REPARTITION_BY_NUM prints as a SinglePartition exchange above)
+    val prOps = new AdaptiveSparkPlanHelper {}
+      .collect(prStep.queryExecution.executedPlan) { case p => p }
+    println(s"superstep operators: ${prOps.count(_.isInstanceOf[
+        org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec])} " +
+      s"BroadcastNestedLoopJoin, ${prOps.count {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
+          e.outputPartitioning == org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+        case _ => false }} SinglePartition exchange")
 
     // HITS raw-chain superstep (round 7): both gathers of a superstep as
     // ONE lazy plan (no per-phase checkpoint, no per-phase L1 totals — the

@@ -54,12 +54,13 @@ object Bfs {
       val expanded = frontier
         .join(e, frontier("id") === e("src"))
         .select($"dst".as("id"), $"src".as("parent"), ($"dist" + 1).as("dist"))
-      val next = expanded
+      // the frontier size is observed on the frontier's own checkpoint
+      val (next, r) = Iterate.checkpoint(expanded
         .join(visited.select($"id".as("vid")), $"id" === $"vid", "left_anti")
         .groupBy($"id")
-        .agg(min($"parent").as("parent"), first($"dist").as("dist"))
-        .localCheckpoint(true)
-      frontierCount = next.count()
+        .agg(min($"parent").as("parent"), first($"dist").as("dist")),
+        count(lit(1)))
+      frontierCount = r.getLong(0)
       // the visited set is a union of per-depth CHECKPOINTED deltas — the
       // round-6 shape re-checkpointed the whole union every superstep,
       // rewriting O(visited) bytes per level; the lazy union reads the same
@@ -68,14 +69,23 @@ object Bfs {
       // O(depth)-deep plan (O(depth²) driver work, and a Catalyst stack
       // overflow on path-shaped graphs), so the rewrite cost is amortized
       // to 1/32 of the round-6 shape instead of removed outright
-      visited = visited.union(next)
-      if (depth % 32 == 31) visited = visited.localCheckpoint(true)
+      visited = collapse(visited.union(next), depth)
       frontier = next
       depth += 1
     }
     if (!preCached) e.unpersist()
     visited
   }
+
+  /** Levels between collapses of a lazily unioned visited set. */
+  private val CollapseEvery = 32
+
+  /** `visited` after the level `depth` (0-based) delta was unioned in: every
+    * [[CollapseEvery]] levels the union is checkpointed, bounding the plan
+    * the next anti-join re-analyzes (one unioned delta per level). */
+  private def collapse(visited: DataFrame, depth: Int): DataFrame =
+    if (depth % CollapseEvery == CollapseEvery - 1) visited.localCheckpoint(true)
+    else visited
 
   /**
    * Resumable single-source BFS with FRONTIER-DELTA commits: the visited set
@@ -163,23 +173,22 @@ object Bfs {
     var radF = 0; var radB = 0         // completed levels per side
 
     def expand(frontier: DataFrame, frontierCount: Long, visited: DataFrame,
-        edges: DataFrame): (DataFrame, DataFrame, Long) = {
+        edges: DataFrame, depth: Int): (DataFrame, DataFrame, Long) = {
       // broadcast the EXPANDED side's frontier when small (AQE would also
       // catch this, but the count is already known driver-side)
       val f = if (frontierCount < 10000) broadcast(frontier) else frontier
-      val next = f
+      val (next, r) = Iterate.checkpoint(f
         .join(edges, f("id") === edges("src"))
         .select($"dst".as("id"), $"src".as("parent"), ($"dist" + 1).as("dist"))
         .join(visited.select($"id".as("vid")), $"id" === $"vid", "left_anti")
         .groupBy($"id")
-        .agg(min($"parent").as("parent"), first($"dist").as("dist"))
-        .localCheckpoint(true)
-      val n = next.count()
+        .agg(min($"parent").as("parent"), first($"dist").as("dist")),
+        count(lit(1)))
       // lazy union of checkpointed per-level deltas — no O(visited) rewrite
-      // per superstep (see [[distances]]; route searches are depth-bounded
-      // by the meeting condition, far below the plan-depth hazard, so no
-      // periodic collapse is needed here)
-      (next, visited.union(next), n)
+      // per superstep — collapsed every CollapseEvery levels as in
+      // [[distances]]: an unreachable target on a path-shaped graph runs
+      // one side to its eccentricity, not to a meeting
+      (next, collapse(visited.union(next), depth), r.getLong(0))
     }
 
     // Meeting check per superstep: ONLY the newly-expanded frontier can
@@ -226,11 +235,11 @@ object Bfs {
       else {
         val goForward = canF && (!canB || cntF <= cntB)
         if (goForward) {
-          val (nf, nv, n) = expand(frontF, cntF, visF, eOut)
+          val (nf, nv, n) = expand(frontF, cntF, visF, eOut, radF)
           frontF = nf; visF = nv; cntF = n; sizeF += n; radF += 1
           best = better(best, meetingOf(frontF, visB, frontierIsForward = true))
         } else {
-          val (nb, nv, n) = expand(frontB, cntB, visB, eIn)
+          val (nb, nv, n) = expand(frontB, cntB, visB, eIn, radB)
           frontB = nb; visB = nv; cntB = n; sizeB += n; radB += 1
           best = better(best, meetingOf(frontB, visF, frontierIsForward = false))
         }

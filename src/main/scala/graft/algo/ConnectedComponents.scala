@@ -1,6 +1,6 @@
 package graft.algo
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 
 import graft.graph.Edge
@@ -19,52 +19,29 @@ import graft.graph.Edge
  * cheap count + xor-of-hashes signature, no full diff join). At the fixed
  * point edges form stars rooted at component minima.
  *
- * Both phases are groupBy-min + re-emit: partial aggregation absorbs hub
- * skew; rounds are O(log n) (paper Thm 3). State localCheckpoint-ed per
- * round.
+ * Physical shape per round: both phases are groupBy-min + re-emit (partial
+ * aggregation absorbs hub skew; rounds are O(log n), paper Thm 3), run as
+ * ONE action — the round's localCheckpoint (or committed snapshot, in the
+ * resumable variant), which observes the signature on the same rows
+ * (`Dataset.observe`) instead of a second aggregate job.
  */
 object ConnectedComponents {
 
   case class Result(components: DataFrame, metrics: Seq[SuperstepMetric], rounds: Int)
 
+  /** The fixed-point signature of an evolving (u, v) edge list: its row
+    * count and the xor of its rows' hashes — observed on the action that
+    * materializes the edge list, never a job of its own. */
+  private def signature: Seq[Column] = Seq(count(lit(1)),
+    coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)))
+
+  private def sigOf(r: Row): (Long, Long) = (r.getLong(0), r.getLong(1))
+
   def run(vertices: DataFrame, edges: Dataset[Edge], maxRounds: Int = 50): Result = {
     val spark = edges.sparkSession
     import spark.implicits._
-
-    val verts = vertices.select(col(vertices.columns.head).as("id"))
-    val ops = new StarOps(spark)
-
-    def signature(e: DataFrame): (Long, Long) = {
-      e.agg(count(lit(1)),
-          coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)))
-        .as[(Long, Long)].head()
-    }
-
-    var cur = edges.toDF().select($"src".as("u"), $"dst".as("v"))
-      .filter($"u" =!= $"v").distinct().localCheckpoint(true)
-    var sig = signature(cur)
-    var rounds = 0
-    var converged = false
-    val metrics = scala.collection.mutable.ArrayBuffer[SuperstepMetric]()
-    while (!converged && rounds < maxRounds) {
-      val t0 = System.nanoTime()
-      val next = ops.smallStar(ops.largeStar(cur)).localCheckpoint(true)
-      val nextSig = signature(next)
-      converged = nextSig == sig
-      cur = next
-      sig = nextSig
-      rounds += 1
-      metrics += SuperstepMetric("cc", rounds, sig._1, sig._1,
-        (System.nanoTime() - t0) / 1000000L, if (converged) 0.0 else 1.0)
-    }
-
-    // stars: every non-root points at its component min; roots + isolated
-    // vertices map to themselves
-    val comp = verts
-      .join(cur.select($"u".as("id"), $"v".as("comp")), Seq("id"), "left")
-      .groupBy($"id")
-      .agg(coalesce(min($"comp"), first($"id")).as("component"))
-    Result(comp, metrics.toSeq, rounds)
+    val init = edges.toDF().select($"src".as("u"), $"dst".as("v"))
+    converge("cc", vertices, init, maxRounds)
   }
 
   /**
@@ -95,88 +72,99 @@ object ConnectedComponents {
       prevComponents: DataFrame, maxRounds: Int = 50): Result = {
     val spark = deltaEdges.sparkSession
     import spark.implicits._
-    val verts = vertices.select(col(vertices.columns.head).as("id"))
-    val ops = new StarOps(spark)
-
-    def signature(e: DataFrame): (Long, Long) =
-      e.agg(count(lit(1)),
-          coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)))
-        .as[(Long, Long)].head()
-
     val stars = prevComponents
       .select(col(prevComponents.columns.head).cast("long").as("u"),
         col(prevComponents.columns(1)).cast("long").as("v"))
-    var cur = stars
-      .union(deltaEdges.toDF().select($"src".as("u"), $"dst".as("v")))
-      .filter($"u" =!= $"v").distinct().localCheckpoint(true)
-    var sig = signature(cur)
+    converge("cc-warm", vertices,
+      stars.union(deltaEdges.toDF().select($"src".as("u"), $"dst".as("v"))),
+      maxRounds)
+  }
+
+  /** The in-memory round loop of [[run]] / [[warmStart]]: ONE action per
+    * round — the checkpoint of the round's edge list, which also observes
+    * its [[signature]]; the fixed point is two equal signatures in a row. */
+  private def converge(algo: String, vertices: DataFrame, init: DataFrame,
+      maxRounds: Int): Result = {
+    val spark = init.sparkSession
+    import spark.implicits._
+    val ops = new StarOps(spark)
+    val (cur0, r0) = Iterate.checkpoint(
+      init.filter($"u" =!= $"v").distinct(), signature: _*)
+    var cur = cur0
+    var sig = sigOf(r0)
     var rounds = 0
     var converged = false
     val metrics = scala.collection.mutable.ArrayBuffer[SuperstepMetric]()
     while (!converged && rounds < maxRounds) {
       val t0 = System.nanoTime()
-      val next = ops.smallStar(ops.largeStar(cur)).localCheckpoint(true)
-      val nextSig = signature(next)
-      converged = nextSig == sig
+      val (next, r) = Iterate.checkpoint(ops.smallStar(ops.largeStar(cur)),
+        signature: _*)
+      converged = sigOf(r) == sig
       cur = next
-      sig = nextSig
+      sig = sigOf(r)
       rounds += 1
-      metrics += SuperstepMetric("cc-warm", rounds, sig._1, sig._1,
-        (System.nanoTime() - t0) / 1000000L, if (converged) 0.0 else 1.0)
+      metrics += SuperstepMetric(algo, rounds, sig._1, sig._1,
+        Iterate.msSince(t0), if (converged) 0.0 else 1.0)
     }
-    val comp = verts
-      .join(cur.select($"u".as("id"), $"v".as("comp")), Seq("id"), "left")
+    Result(components(vertices, cur), metrics.toSeq, rounds)
+  }
+
+  /** Stars → labels: every non-root points at its component min; roots +
+    * isolated vertices map to themselves. */
+  private def components(vertices: DataFrame, stars: DataFrame): DataFrame = {
+    val spark = stars.sparkSession
+    import spark.implicits._
+    vertices.select(col(vertices.columns.head).as("id"))
+      .join(stars.select($"u".as("id"), $"v".as("comp")), Seq("id"), "left")
       .groupBy($"id")
       .agg(coalesce(min($"comp"), first($"id")).as("component"))
-    Result(comp, metrics.toSeq, rounds)
   }
 
   /**
    * Resumable variant: each round's evolving edge set is committed through
    * [[graft.state.Supersteps]] (snapshot properties carry the fixed-point
    * signature), so a killed job resumes at the last committed round and the
-   * final components are byte-identical to an uninterrupted run.
+   * final components are byte-identical to an uninterrupted run. The
+   * signature is observed on each commit's own write; a resumed run that
+   * still has rounds to go re-derives it once from the committed edges.
    */
   def runResumable(vertices: DataFrame, edges: Dataset[Edge],
       log: graft.state.Supersteps, maxRounds: Int = 50): Result = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val verts = vertices.select(col(vertices.columns.head).as("id"))
-
-    def signature(e: DataFrame): (Long, Long) =
-      e.agg(count(lit(1)),
-          coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)))
-        .as[(Long, Long)].head()
-
+    def commit(round: Int, next: DataFrame)(metric: ((Long, Long)) => SuperstepMetric)
+        : (DataFrame, (Long, Long), SuperstepMetric) = {
+      val (observed, sig) = Iterate.observe(next, signature: _*)
+      val (state, r, m) = log.commit(round, observed, sig)(r => metric(sigOf(r)))
+      (state, sigOf(r), m)
+    }
     var rounds = log.lastCompleted.getOrElse(-1)
-    var cur =
-      if (rounds < 0) {
-        val init = edges.toDF().select($"src".as("u"), $"dst".as("v"))
-          .filter($"u" =!= $"v").distinct()
-        rounds = 0
-        log.commit(0, init, SuperstepMetric("cc", 0, 0L, 0L, 0L, 1.0))
-      } else log.readState()
-    var sig = signature(cur)
     var converged = log.lineage.lastOption.exists(_("delta") == "0.0")
+    var (cur, sig) =
+      if (rounds < 0) {
+        rounds = 0
+        val (state, s, _) = commit(0, edges.toDF().select($"src".as("u"), $"dst".as("v"))
+          .filter($"u" =!= $"v").distinct())(_ => SuperstepMetric("cc", 0, 0L, 0L, 0L, 1.0))
+        (state, s)
+      } else {
+        val state = log.readState()
+        (state, if (converged) (0L, 0L) else sigOf(state.agg(signature.head, signature.tail: _*).head()))
+      }
     val metrics = scala.collection.mutable.ArrayBuffer[SuperstepMetric]()
     val ops = new StarOps(spark)
     while (!converged && rounds < maxRounds) {
       val t0 = System.nanoTime()
-      val next = ops.smallStar(ops.largeStar(cur))
-      val nextSig = signature(next)
-      converged = nextSig == sig
-      sig = nextSig
       rounds += 1
-      val m = SuperstepMetric("cc", rounds, sig._1, sig._1,
-        (System.nanoTime() - t0) / 1000000L, if (converged) 0.0 else 1.0)
-      cur = log.commit(rounds, next, m)
+      val (state, nextSig, m) = commit(rounds, ops.smallStar(ops.largeStar(cur))) { s =>
+        SuperstepMetric("cc", rounds, s._1, s._1, Iterate.msSince(t0),
+          if (s == sig) 0.0 else 1.0)
+      }
+      converged = nextSig == sig
+      cur = state
+      sig = nextSig
       metrics += m
     }
-    val comp = verts
-      .join(cur.select($"u".as("id"), $"v".as("comp")), Seq("id"), "left")
-      .groupBy($"id")
-      .agg(coalesce(min($"comp"), first($"id")).as("component"))
-    Result(comp, metrics.toSeq, rounds)
+    Result(components(vertices, cur), metrics.toSeq, rounds)
   }
 
   /** Star operations shared by run/runResumable. */

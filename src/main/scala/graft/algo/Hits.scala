@@ -55,8 +55,17 @@ object Hits {
       .groupBy(col(outKey).as("id"))
       .agg(sum(col(scoreCol)).as("raw"))
 
+  /** [[Layout.requireEndpoints]], releasing the set-up's caches first when
+    * it fails. */
+  private def requireEndpoints(outside: Long, cached: DataFrame*): Unit = {
+    if (outside > 0) cached.foreach(_.unpersist())
+    Layout.requireEndpoints(outside)
+  }
+
   /**
-   * @param vertices single-column `id` frame (every vertex, incl. isolated)
+   * @param vertices single-column `id` frame (every vertex, incl. isolated;
+   *                 every edge endpoint must be one — an edge that breaks
+   *                 this fails the call instead of adding a scored row)
    * @param maxIter  fixed superstep count (no tolerance early-exit: keeps
    *                 the unrolled SQL oracle exact; callers wanting
    *                 convergence detection read the metrics' delta)
@@ -91,13 +100,19 @@ object Hits {
 
     // the two one-time edge layouts: each phase's join keys on a different
     // side of the edge, so each gets the co-located layout it needs — the
-    // per-superstep joins never shuffle the edge side again
-    val edgesBySrc = e0.repartition(Layout.edgePartitions(edgeCount), $"src")
+    // per-superstep joins never shuffle the edge side again. The src
+    // layout's materialization also counts the edges that break the
+    // vertex-set contract
+    val (checked, outside) = Layout.checkedEndpoints(e0,
+      verts.select($"id".as("src")), verts.select($"id".as("dst")))
+    val edgesBySrc = checked.repartition(Layout.edgePartitions(edgeCount), $"src")
       .persist(StorageLevel.MEMORY_AND_DISK)
     val edgesByDst = e0.repartition(Layout.edgePartitions(edgeCount), $"dst")
       .persist(StorageLevel.MEMORY_AND_DISK)
     // one action materializes both layout caches
     edgesBySrc.union(edgesByDst).count()
+    if (!preCached) e0.unpersist()
+    requireEndpoints(outside(), edgesBySrc, edgesByDst, verts)
     // fixed zero-score sets: a vertex with no in-edges always has auth 0,
     // no out-edges always hub 0 — precomputing them once replaces the
     // per-phase verts⋈raw left join (an n-row Exchange per phase) with a
@@ -107,7 +122,6 @@ object Hits {
       Seq("id"), "left_anti")
     val noOut = verts.join(edgesBySrc.select($"src".as("id")).distinct(),
       Seq("id"), "left_anti")
-    if (!preCached) e0.unpersist()
 
     /** L1 total of a raw gather as a broadcast 1-row scalar (0 → divide by
       * 1: all-zero sides keep zeros). */
@@ -228,11 +242,14 @@ object Hits {
     val n = verts.count()
     require(n > 0, "empty vertex set")
     val edgeCount = edges.count()
-    val edgesBySrc = edges.toDF().repartition($"src")
+    val (checked, outside) = Layout.checkedEndpoints(edges.toDF(),
+      verts.select($"id".as("src")), verts.select($"id".as("dst")))
+    val edgesBySrc = checked.repartition($"src")
       .persist(StorageLevel.MEMORY_AND_DISK)
     val edgesByDst = edges.toDF().repartition($"dst")
       .persist(StorageLevel.MEMORY_AND_DISK)
     edgesBySrc.count(); edgesByDst.count()
+    requireEndpoints(outside(), edgesBySrc, edgesByDst, verts)
 
     var iter = log.lastCompleted.getOrElse(-1)
     var scores =

@@ -30,7 +30,15 @@ import graft.graph.Edge
  * Physical shape per round: the surviving-vertex set (n rows, shrinking)
  * left-semi-joins the undirected pair table on BOTH endpoints, then one
  * partial/final count by endpoint — hub degree combines map-side; the
- * pair table is built and cached ONCE. State localCheckpoint-ed per round.
+ * pair table is built and cached ONCE. State localCheckpoint-ed per round,
+ * and the checkpoint observes the survivor count — one action per round.
+ *
+ * Metrics contract: `Result.rounds` is the number of rounds EXECUTED and
+ * `metrics` holds exactly one entry per executed round. The loop stops at
+ * the first round that drops nothing, also in fixed-rounds mode, so a
+ * `rounds = 8` call can report fewer than 8 rounds and metrics — the
+ * members are those of the full unroll (the skipped rounds are no-ops),
+ * but a consumer must not expect `rounds` entries.
  */
 object KCore {
 
@@ -72,9 +80,11 @@ object KCore {
     und.count()
     if (!rawPreCached) undRaw.unpersist()
 
-    var alive = vertices.select(col(vertices.columns.head).as("id"))
-      .localCheckpoint(true)
-    var aliveCount = alive.count()
+    // every alive-set size is observed on the alive set's own checkpoint
+    val (alive0, r0) = Iterate.checkpoint(
+      vertices.select(col(vertices.columns.head).as("id")), count(lit(1)))
+    var alive = alive0
+    var aliveCount = r0.getLong(0)
     val metrics = scala.collection.mutable.ArrayBuffer[SuperstepMetric]()
     var round = 0
     var converged = false
@@ -84,21 +94,20 @@ object KCore {
     // the m-row pair table are skipped (round-6 verdict wrong-#2)
     while (!converged && (rounds == 0 || round < rounds)) {
       val t0 = System.nanoTime()
-      val next = und
+      val (next, r) = Iterate.checkpoint(und
         .join(alive.withColumnRenamed("id", "u"), Seq("u"), "left_semi")
         .join(alive.withColumnRenamed("id", "v"), Seq("v"), "left_semi")
         .groupBy($"u".as("id"))
         .agg(count(lit(1)).as("deg"))
         .filter($"deg" >= k)
-        .select($"id")
-        .localCheckpoint(true)
-      val nextCount = next.count()
+        .select($"id"), count(lit(1)))
+      val nextCount = r.getLong(0)
       converged = nextCount == aliveCount
       alive = next
       aliveCount = nextCount
       round += 1
       metrics += SuperstepMetric("kcore", round, nextCount, pairCount,
-        (System.nanoTime() - t0) / 1000000L, -1.0)
+        Iterate.msSince(t0), -1.0)
     }
     und.unpersist()
     Result(alive, metrics.toSeq, round)

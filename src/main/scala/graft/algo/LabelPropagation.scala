@@ -1,6 +1,6 @@
 package graft.algo
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.graph.Edge
@@ -20,46 +20,66 @@ import graft.graph.Edge
  *
  * Shape per superstep: one join labels⋈edges + one two-level aggregation
  * (count per (v,label), then max_by-with-min-tie per v) — both partial-agg
- * friendly, hub-skew absorbed map-side.
+ * friendly, hub-skew absorbed map-side — then the labels⋈chosen row that
+ * holds each vertex's old and new label. ONE action per superstep: the
+ * checkpoint (or committed snapshot, in the resumable variant) of the new
+ * labels observes (`Dataset.observe`) the changed count on that row
+ * instead of a second join/count job.
  */
 object LabelPropagation {
 
   case class Result(labels: DataFrame, metrics: Seq[SuperstepMetric], iterations: Int)
+
+  /** The undirected, self-loop-free, distinct (u, v) pair table,
+    * checkpointed, and its row count (observed on the same action). */
+  private def undirected(edges: Dataset[Edge]): (DataFrame, Long) = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val (sym, r) = Iterate.checkpoint(edges.toDF()
+      .select($"src".as("u"), $"dst".as("v"))
+      .union(edges.select($"dst".as("u"), $"src".as("v")))
+      .filter($"u" =!= $"v").distinct(), count(lit(1)))
+    (sym, r.getLong(0))
+  }
+
+  /** One superstep's lazy plan: the labels⋈chosen row — the old `label`
+    * and the chosen `newLabel` (null for an isolated vertex) per vertex. */
+  private def step(sym: DataFrame, labels: DataFrame): DataFrame = {
+    val spark = sym.sparkSession
+    import spark.implicits._
+    val nbrLabels = sym.join(labels, sym("v") === labels("id"))
+      .select($"u", $"label")
+    val freq = nbrLabels.groupBy($"u", $"label").agg(count(lit(1)).as("c"))
+    // most frequent, ties to smallest label: max over (c, -label)
+    val chosen = freq.groupBy($"u")
+      .agg(max(struct($"c", (-$"label").as("nl"))).as("top"))
+      .select($"u".as("id"), (-$"top.nl").as("newLabel"))
+    labels.join(chosen, Seq("id"), "left")
+  }
+
+  private def newLabel: Column = coalesce(col("newLabel"), col("label"))
+
+  /** The vertices whose label a [[step]] row changes. */
+  private def changedCount: Column = count(when(newLabel =!= col("label"), 1))
 
   def run(vertices: DataFrame, edges: Dataset[Edge], maxIter: Int = 10): Result = {
     val spark = edges.sparkSession
     import spark.implicits._
 
     val verts = vertices.select(col(vertices.columns.head).as("id"))
-    val sym = edges.toDF()
-      .select($"src".as("u"), $"dst".as("v"))
-      .union(edges.select($"dst".as("u"), $"src".as("v")))
-      .filter($"u" =!= $"v").distinct()
-      .localCheckpoint(true)
-
+    val (sym, edgeCount) = undirected(edges)
     var labels = verts.withColumn("label", $"id").localCheckpoint(true)
     val metrics = scala.collection.mutable.ArrayBuffer[SuperstepMetric]()
     var iter = 0
     var changed = Long.MaxValue
-    val edgeCount = sym.count()
     while (iter < maxIter && changed > 0) {
       val t0 = System.nanoTime()
-      val nbrLabels = sym.join(labels, sym("v") === labels("id"))
-        .select($"u", $"label")
-      val freq = nbrLabels.groupBy($"u", $"label").agg(count(lit(1)).as("c"))
-      // most frequent, ties to smallest label: max over (c, -label)
-      val chosen = freq.groupBy($"u")
-        .agg(max(struct($"c", (-$"label").as("nl"))).as("top"))
-        .select($"u".as("id"), (-$"top.nl").as("newLabel"))
-      val next = labels.join(chosen, Seq("id"), "left")
-        .select($"id", coalesce($"newLabel", $"label").as("label"))
-        .localCheckpoint(true)
-      changed = next.join(labels.withColumnRenamed("label", "old"), "id")
-        .filter($"label" =!= $"old").count()
-      labels = next
+      val (row, moved) = Iterate.observe(step(sym, labels), changedCount)
+      labels = row.select($"id", newLabel.as("label")).localCheckpoint(true)
+      changed = moved().getLong(0)
       iter += 1
       metrics += SuperstepMetric("lpa", iter, changed, edgeCount,
-        (System.nanoTime() - t0) / 1000000L, changed.toDouble)
+        Iterate.msSince(t0), changed.toDouble)
     }
     Result(labels, metrics.toSeq, iter)
   }
@@ -71,12 +91,7 @@ object LabelPropagation {
     val spark = edges.sparkSession
     import spark.implicits._
     val verts = vertices.select(col(vertices.columns.head).as("id"))
-    val sym = edges.toDF()
-      .select($"src".as("u"), $"dst".as("v"))
-      .union(edges.select($"dst".as("u"), $"src".as("v")))
-      .filter($"u" =!= $"v").distinct()
-      .localCheckpoint(true)
-    val edgeCount = sym.count()
+    val (sym, edgeCount) = undirected(edges)
 
     var iter = log.lastCompleted.getOrElse(-1)
     var labels =
@@ -90,21 +105,15 @@ object LabelPropagation {
     val metrics = scala.collection.mutable.ArrayBuffer[SuperstepMetric]()
     while (iter < maxIter && changed != 0) {
       val t0 = System.nanoTime()
-      val nbrLabels = sym.join(labels, sym("v") === labels("id"))
-        .select($"u", $"label")
-      val freq = nbrLabels.groupBy($"u", $"label").agg(count(lit(1)).as("c"))
-      val chosen = freq.groupBy($"u")
-        .agg(max(struct($"c", (-$"label").as("nl"))).as("top"))
-        .select($"u".as("id"), (-$"top.nl").as("newLabel"))
-      val next = labels.join(chosen, Seq("id"), "left")
-        .select($"id", coalesce($"newLabel", $"label").as("label"))
-        .localCheckpoint(true)
-      changed = next.join(labels.withColumnRenamed("label", "old"), "id")
-        .filter($"label" =!= $"old").count()
+      val (row, moved) = Iterate.observe(step(sym, labels), changedCount)
       iter += 1
-      val m = SuperstepMetric("lpa", iter, changed, edgeCount,
-        (System.nanoTime() - t0) / 1000000L, changed.toDouble)
-      labels = log.commit(iter, next, m)
+      val (state, r, m) = log.commit(iter,
+          row.select($"id", newLabel.as("label")), moved) { r =>
+        SuperstepMetric("lpa", iter, r.getLong(0), edgeCount,
+          Iterate.msSince(t0), r.getLong(0).toDouble)
+      }
+      labels = state
+      changed = r.getLong(0)
       metrics += m
     }
     Result(labels, metrics.toSeq, iter)

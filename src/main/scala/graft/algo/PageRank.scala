@@ -1,6 +1,6 @@
 package graft.algo
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -26,18 +26,27 @@ case class SuperstepMetric(
  *   rank'(v) = (1-d)/n + d * ( Σ_{u→v} rank(u)/outdeg(u) + dangling/n )
  *
  * Physical shape per superstep: one hash join ranks⋈edges on `src` (AQE
- * skew-split as backstop; hub out-degree fans out map-side) and one partial
+ * skew-split as backstop; hub out-degree fans out map-side), one partial
  * + final hash aggregation by `dst` (map-side combine absorbs hub in-degree
- * skew). The edges⋈outdeg weight join happens ONCE before the loop.
- * Superstep state is localCheckpoint-ed (plan depth O(1)); the resumable
- * variant writes state tables through Supersteps instead.
+ * skew) and a union of the fixed no-in-edge rows — ONE action, which also
+ * observes (`Dataset.observe`) the dangling mass Σ rank over dangling
+ * vertices that the next superstep's teleport term takes as a driver
+ * literal: no broadcast scalar subplan, no SinglePartition exchange, no
+ * second job. The edge weights and every vertex's fixed dangling flag are
+ * joined ONCE before the loop. Superstep state is localCheckpoint-ed (plan
+ * depth O(1)); the resumable variant commits state tables through
+ * Supersteps instead, observing the mass on each commit's write.
+ *
+ * Contract: every edge endpoint is in `vertices`; an edge that breaks it
+ * fails the call (IllegalArgumentException) instead of adding a ranked row.
  */
 object PageRank {
 
   case class Result(ranks: DataFrame, metrics: Seq[SuperstepMetric], iterations: Int)
 
   /**
-   * @param vertices single-column `id` DataFrame (every vertex, incl. isolated)
+   * @param vertices single-column `id` DataFrame (every vertex, incl.
+   *                 isolated; every edge endpoint must be one)
    * @param tol      max per-vertex |Δrank| convergence threshold; 0 ⇒ run
    *                 exactly `maxIter` supersteps
    */
@@ -105,82 +114,21 @@ object PageRank {
       sources: Seq[Long],
       damping: Double = 0.85,
       maxIter: Int = 10): Result = {
-    val spark = edges.sparkSession
-    import spark.implicits._
     require(sources.nonEmpty, "personalized PageRank needs >= 1 source id")
     val srcIds = sources.distinct
     val s = srcIds.size.toDouble
-
-    // cache the raw edge input once — see [[runFrom]]'s note (same four
-    // consumers of the edge lineage, same CacheManager substitution win)
-    val preCached = edges.storageLevel != StorageLevel.NONE
-    val e0 = edges.toDF()
-    if (!preCached) e0.persist(StorageLevel.MEMORY_AND_DISK)
-    val edgeCount = e0.count()
-    val verts = vertices.select(col(vertices.columns.head).as("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = verts.count()
-    require(n > 0, "empty vertex set")
-    val present = verts.filter($"id".isin(srcIds.map(lit(_)): _*)).count()
+    val isSrc = col("id").isin(srcIds.map(lit(_)): _*)
+    val g = setUp(vertices, edges)
+    val present = g.flags.filter(isSrc).count()
     require(present == srcIds.size,
       s"${srcIds.size - present} source id(s) not in the vertex set")
-    val isSrc = col("id").isin(srcIds.map(lit(_)): _*)
-
-    val outDeg = e0.groupBy($"src").agg(count(lit(1)).as("deg"))
-    val edgesW = e0.join(outDeg, "src")
-      .select($"src", $"dst", (lit(1.0) / $"deg").as("w"))
-      .repartition(Layout.edgePartitions(edgeCount), $"src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    edgesW.count()
-    val dangling = verts.join(e0.select($"src".as("id")).distinct(),
-      Seq("id"), "left_anti").persist(StorageLevel.MEMORY_AND_DISK)
-    val danglingCount = dangling.count()
-    // fixed no-in-edge set: replaces the per-superstep verts⋈contribs left
-    // join with a union, exactly as in [[runFrom]]
-    val noIn = verts.join(e0.select($"dst".as("id")).distinct(),
-      Seq("id"), "left_anti").localCheckpoint(true)
-    if (!preCached) e0.unpersist()
-
-    var ranks = verts
-      .select($"id", when(isSrc, lit(1.0 / s)).otherwise(lit(0.0)).as("rank"))
-      .localCheckpoint(true)
-    val metrics = scala.collection.mutable.ArrayBuffer[SuperstepMetric]()
-    var iter = 0
-    while (iter < maxIter) {
-      val t0 = System.nanoTime()
-      val contribs = ranks.join(edgesW, ranks("id") === edgesW("src"))
-        .groupBy($"dst".as("id"))
-        .agg(sum($"rank" * $"w").as("contrib"))
-      // teleport base per row: CASE isSrc THEN (1-d)/|S| + (d*dm)/|S| ELSE 0,
-      // with the dangling mass dm as a broadcast 1-row scalar folded into
-      // the superstep's own action (same bit-identical-arithmetic argument
-      // as [[runFrom]]; a no-in-edge vertex's d*0.0 term adds exact +0.0)
-      val newRanks = (if (danglingCount == 0) {
-        val srcBase = (1.0 - damping) / s
-        contribs.select($"id",
-            (when(isSrc, lit(srcBase)).otherwise(lit(0.0))
-              + lit(damping) * $"contrib").as("rank"))
-          .union(noIn.select($"id",
-            when(isSrc, lit(srcBase)).otherwise(lit(0.0)).as("rank")))
-      } else {
-        val dm = broadcast(ranks.join(dangling, "id")
-          .agg(coalesce(sum($"rank"), lit(0.0)).as("dm")))
-        val srcBase = lit((1.0 - damping) / s) +
-          lit(damping) * $"dm" / lit(s)
-        contribs.crossJoin(dm)
-          .select($"id",
-            (when(isSrc, srcBase).otherwise(lit(0.0))
-              + lit(damping) * $"contrib").as("rank"))
-          .union(noIn.crossJoin(dm).select($"id",
-            when(isSrc, srcBase).otherwise(lit(0.0)).as("rank")))
-      }).localCheckpoint(true)
-      ranks = newRanks
-      iter += 1
-      metrics += SuperstepMetric("ppr", iter, n, edgeCount,
-        (System.nanoTime() - t0) / 1000000L, -1.0)
-    }
-    edgesW.unpersist(); dangling.unpersist(); verts.unpersist()
-    Result(ranks, metrics.toSeq, iter)
+    // teleport per row: CASE isSrc THEN (1-d)/|S| + (d*dm)/|S| ELSE 0 — the
+    // same arithmetic as the oracle; a no-in-edge row's d*0.0 term is absent
+    val teleport = (dm: Double) =>
+      when(isSrc, lit((1.0 - damping) / s + damping * dm / s)).otherwise(lit(0.0))
+    val init = g.flags.select(col("id"),
+      when(isSrc, lit(1.0 / s)).otherwise(lit(0.0)).as("rank"), col("dangling"))
+    iterate("ppr", g, init, teleport, damping, tol = 0.0, maxIter)
   }
 
   /** Carry a rank vector across a RE-CONVERTED warehouse: dense ids are the
@@ -198,40 +146,105 @@ object PageRank {
       .select($"id", $"rank")
   }
 
-  /** One superstep's LAZY plan (the loop body of [[runFrom]], exposed as a
-    * seam for the plan audit): one hash join ranks⋈edgesW (edge side
-    * pre-partitioned, never reshuffled), one partial/final aggregation by
-    * dst, the dangling mass as a broadcast 1-row scalar folded into the
-    * same plan, and the fixed no-in-edge rows UNIONED in — no per-superstep
-    * verts⋈contribs Exchange. */
-  private[graft] def superstepPlan(ranks: DataFrame, edgesW: DataFrame,
-      noIn: DataFrame, dangling: DataFrame, danglingCount: Long,
-      damping: Double, n: Long): DataFrame = {
-    val spark = ranks.sparkSession
-    import spark.implicits._
-    val contribs = ranks.join(edgesW, ranks("id") === edgesW("src"))
-      .groupBy($"dst".as("id"))
-      .agg(sum($"rank" * $"w").as("contrib"))
-    // dangling mass folds into the superstep's own action as a broadcast
-    // 1-row scalar instead of a separate driver round-trip per superstep;
-    // the expression tree mirrors the old driver arithmetic exactly
-    // ((1-d)/n + (d*dm)/n, then base + d*contrib — a no-in-edge vertex's
-    // d*0.0 contribution adds exact +0.0), so ranks are bit-identical to
-    // the two-action / verts-left-join formulation
-    if (danglingCount == 0) {
-      val base = (1.0 - damping) / n
-      contribs.select($"id", (lit(base) + lit(damping) * $"contrib").as("rank"))
-        .union(noIn.select($"id", lit(base).as("rank")))
-    } else {
-      val dm = broadcast(ranks.join(dangling, "id")
-        .agg(coalesce(sum($"rank"), lit(0.0)).as("dm")))
-      val baseCol = lit((1.0 - damping) / n) +
-        lit(damping) * $"dm" / lit(n.toDouble)
-      contribs.crossJoin(dm)
-        .select($"id", (baseCol + lit(damping) * $"contrib").as("rank"))
-        .union(noIn.crossJoin(dm).select($"id", baseCol.as("rank")))
-    }
+  /** The one-time set-up every entry point shares: the vertex count, the
+    * edge count, the weighted edge layout, the per-vertex dangling flags and
+    * the fixed no-in-edge rows. */
+  private case class Graph(n: Long, edgeCount: Long, flags: DataFrame,
+      edgesW: DataFrame, noIn: DataFrame) {
+    def release(): Unit = edgesW.unpersist()
   }
+
+  private def setUp(vertices: DataFrame, edges: Dataset[Edge]): Graph = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    // cache the raw edge input ONCE before anything reads it: the setup
+    // below consumes the edge lineage several times (out-degree, distinct
+    // dst, the weight layout, and — via CacheManager subplan substitution —
+    // any caller-side vertex frame derived from the same edge plan), and
+    // without this each consumer re-ran the full upstream scan+distinct
+    val preCached = edges.storageLevel != StorageLevel.NONE
+    val e0 = edges.toDF()
+    if (!preCached) e0.persist(StorageLevel.MEMORY_AND_DISK)
+    val (flags, n, edgeCount, edgesW) =
+      try {
+        // one action builds the edge cache and the per-vertex flags and
+        // observes both counts: n, and Σ outdeg over the vertex set — the
+        // edge count whenever the endpoint contract holds, which the weight
+        // layout checks next
+        val (flags, counts) = Iterate.checkpoint(vertexFlags(e0,
+            vertices.select(col(vertices.columns.head).as("id"))),
+          count(lit(1)), coalesce(sum($"deg"), lit(0L)))
+        require(counts.getLong(0) > 0, "empty vertex set")
+        (flags, counts.getLong(0), counts.getLong(1),
+          weightedEdges(e0, flags, counts.getLong(1)))
+      } finally if (!preCached) e0.unpersist()
+    // vertices with NO in-edges never appear in the contribution aggregate;
+    // the set is FIXED across supersteps, so unioning these rows in replaces
+    // the per-superstep verts⋈contribs left join (an n-row Exchange + sort
+    // per superstep, guide §2.4)
+    Graph(n, edgeCount, flags.select($"id", $"deg".isNull.as("dangling")),
+      edgesW, flags.filter(!$"hasIn").select($"id", $"deg".isNull.as("dangling")))
+  }
+
+  /** Per vertex (lazy): out-degree `deg` (null for a dangling vertex — no
+    * out-edges; its mass redistributes uniformly) and `hasIn`. */
+  private[graft] def vertexFlags(e0: DataFrame, verts: DataFrame): DataFrame = {
+    val spark = e0.sparkSession
+    import spark.implicits._
+    verts
+      .join(e0.groupBy($"src".as("id")).agg(count(lit(1)).as("deg")), Seq("id"), "left")
+      .join(e0.select($"dst".as("id")).distinct().withColumn("in", lit(true)),
+        Seq("id"), "left")
+      .select($"id", $"deg", $"in".isNotNull.as("hasIn"))
+  }
+
+  /** The one-time weighted edge layout (src, dst, w = 1/outdeg(src), dd =
+    * dst is dangling), pre-partitioned by src and cached so the
+    * per-superstep join only shuffles the (n-row) rank side, never the
+    * (m-row) edge side. Every edge endpoint must be a vertex (an outside
+    * endpoint would come back as an extra ranked row): the edges that break
+    * it are counted by an observed metric on the layout's own
+    * materialization, and a nonzero count fails the call. */
+  private[graft] def weightedEdges(e0: DataFrame, flags: DataFrame,
+      edgeCount: Long): DataFrame = {
+    val spark = e0.sparkSession
+    import spark.implicits._
+    val (joined, outside) = Layout.checkedEndpoints(e0,
+      flags.select($"id".as("src"), $"deg"),
+      flags.select($"id".as("dst"), $"deg".isNull.as("dd")))
+    val edgesW = joined.select($"src", $"dst", (lit(1.0) / $"deg").as("w"), $"dd")
+      .repartition(Layout.edgePartitions(edgeCount), $"src")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    edgesW.count()
+    val bad = outside()
+    if (bad > 0) edgesW.unpersist()
+    Layout.requireEndpoints(bad)
+    edgesW
+  }
+
+  /** Σ rank over the dangling rows: the next superstep's dangling mass,
+    * observed on the action that materializes this superstep. */
+  private def danglingMass: Column =
+    Iterate.massSum(when(col("dangling"), col("rank")))
+
+  /** One superstep's LAZY plan (the loop body of every entry point, exposed
+    * as a seam for the plan audit): one hash join ranks⋈edgesW (edge side
+    * pre-partitioned, never reshuffled), one partial/final aggregation by
+    * dst, and the fixed no-in-edge rows UNIONED in — no per-superstep
+    * verts⋈contribs Exchange. `teleport` is the per-row base term: the
+    * previous superstep's observed dangling mass arrives as a driver
+    * literal inside it, so the plan has no scalar subplan (no broadcast,
+    * no SinglePartition exchange). Each output row carries its vertex's
+    * fixed `dangling` flag for the next observation. The expression tree
+    * mirrors the oracle's arithmetic (base + d*contrib). */
+  private[graft] def superstepPlan(ranks: DataFrame, edgesW: DataFrame,
+      noIn: DataFrame, teleport: Column, damping: Double): DataFrame =
+    ranks.join(edgesW, ranks("id") === edgesW("src"))
+      .groupBy(col("dst").as("id"), col("dd").as("dangling"))
+      .agg(sum(col("rank") * col("w")).as("contrib"))
+      .select(col("id"), (teleport + lit(damping) * col("contrib")).as("rank"),
+        col("dangling"))
+      .union(noIn.select(col("id"), teleport.as("rank"), col("dangling")))
 
   private def runFrom(
       vertices: DataFrame,
@@ -242,80 +255,60 @@ object PageRank {
       maxIter: Int): Result = {
     val spark = edges.sparkSession
     import spark.implicits._
-
-    // cache the raw edge input ONCE before anything reads it: the setup
-    // below consumes the edge lineage four times (count, weight join,
-    // distinct-src anti-join, and — via CacheManager subplan substitution —
-    // any caller-side vertex frame derived from the same edge plan), and
-    // without this each consumer re-ran the full upstream scan+distinct
-    val preCached = edges.storageLevel != StorageLevel.NONE
-    val e0 = edges.toDF()
-    if (!preCached) e0.persist(StorageLevel.MEMORY_AND_DISK)
-    val edgeCount = e0.count()
-    val verts = vertices.select(col(vertices.columns.head).as("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = verts.count()
-    require(n > 0, "empty vertex set")
-
-    // one-time: per-source weight = 1/outdeg, attached to each edge;
-    // pre-partitioned by src so the per-superstep join only shuffles the
-    // (n-row) rank side, never the (m-row) edge side
-    val outDeg = e0.groupBy($"src").agg(count(lit(1)).as("deg"))
-    val edgesW = e0.join(outDeg, "src")
-      .select($"src", $"dst", (lit(1.0) / $"deg").as("w"))
-      .repartition(Layout.edgePartitions(edgeCount), $"src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    edgesW.count()
-    // dangling vertices: no out-edges; their mass redistributes uniformly.
-    // On graphs with none (common after dangling-link elimination) the whole
-    // per-superstep mass term is skipped.
-    val dangling = verts.join(e0.select($"src".as("id")).distinct(),
-      Seq("id"), "left_anti").persist(StorageLevel.MEMORY_AND_DISK)
-    val danglingCount = dangling.count()
-    // vertices with NO in-edges never appear in the contribution aggregate;
-    // the set is FIXED across supersteps, so computing it once replaces the
-    // per-superstep verts⋈contribs left join (an n-row Exchange + sort per
-    // superstep, guide §2.4) with a plain union of this frame
-    val noIn = verts.join(e0.select($"dst".as("id")).distinct(),
-      Seq("id"), "left_anti").localCheckpoint(true)
-    if (!preCached) e0.unpersist()
-
-    var ranks = (prevRanks match {
-      case None => verts.withColumn("rank", lit(1.0 / n))
+    val g = setUp(vertices, edges)
+    val n = g.n
+    val init = prevRanks match {
+      case None => g.flags.select($"id", lit(1.0 / n).as("rank"), $"dangling")
       case Some(prev) =>
         // seed = prior ranks restricted to the current vertex set, new
         // vertices at 1/n, renormalized to a probability distribution
-        val seeded = verts
+        val seeded = g.flags
           .join(prev.select($"id", $"rank".as("prev")), Seq("id"), "left")
-          .select($"id", coalesce($"prev", lit(1.0 / n)).as("rank"))
+          .select($"id", coalesce($"prev", lit(1.0 / n)).as("rank"), $"dangling")
           .localCheckpoint(true)
         val total = seeded.agg(sum($"rank")).as[Double].head()
-        seeded.select($"id", ($"rank" / total).as("rank"))
-    }).localCheckpoint(true)
+        seeded.select($"id", ($"rank" / total).as("rank"), $"dangling")
+    }
+    iterate("pagerank", g, init, uniformTeleport(n, damping), damping, tol, maxIter)
+  }
+
+  /** The frozen convention's base term, (1-d)/n + (d*dm)/n, for the previous
+    * superstep's dangling mass dm — the oracle's arithmetic exactly. */
+  private def uniformTeleport(n: Long, damping: Double): Double => Column =
+    dm => lit((1.0 - damping) / n + damping * dm / n)
+
+  /** The in-memory superstep loop: ONE action per superstep (the
+    * checkpoint of [[superstepPlan]]), which also observes the dangling
+    * mass the next superstep's teleport needs. `tol > 0` adds the delta
+    * action (it needs the previous ranks). */
+  private def iterate(algo: String, g: Graph, init: DataFrame,
+      teleport: Double => Column, damping: Double, tol: Double,
+      maxIter: Int): Result = {
+    val spark = init.sparkSession
+    import spark.implicits._
+    var (ranks, mass) = Iterate.checkpoint(init, danglingMass)
     val metrics = scala.collection.mutable.ArrayBuffer[SuperstepMetric]()
     var iter = 0
     var delta = Double.MaxValue
     while (iter < maxIter && (tol <= 0.0 || delta > tol)) {
       val t0 = System.nanoTime()
-      // one action per superstep: see [[superstepPlan]]
-      val newRanks = superstepPlan(ranks, edgesW, noIn, dangling,
-        danglingCount, damping, n).localCheckpoint(true)
+      val (next, nextMass) = Iterate.checkpoint(superstepPlan(ranks, g.edgesW,
+        g.noIn, teleport(Iterate.massAt(mass, 0)), damping), danglingMass)
       delta =
         if (tol > 0.0)
-          newRanks.join(ranks.withColumnRenamed("rank", "old"), "id")
+          next.join(ranks.select($"id", $"rank".as("old")), "id")
             .agg(max(abs($"rank" - $"old"))).as[Double].head()
         else Double.MaxValue
-      ranks = newRanks
+      ranks = next
+      mass = nextMass
       iter += 1
-      metrics += SuperstepMetric("pagerank", iter, n, edgeCount,
-        (System.nanoTime() - t0) / 1000000L, if (tol > 0.0) delta else -1.0)
+      metrics += SuperstepMetric(algo, iter, g.n, g.edgeCount,
+        Iterate.msSince(t0), if (tol > 0.0) delta else -1.0)
     }
     // release loop-scoped caches (ranks is localCheckpoint-ed, independent);
     // leaked caches otherwise evict-churn the NEXT job's working set
-    edgesW.unpersist()
-    dangling.unpersist()
-    verts.unpersist()
-    Result(ranks, metrics.toSeq, iter)
+    g.release()
+    Result(ranks.select($"id", $"rank"), metrics.toSeq, iter)
   }
 
   /**
@@ -324,6 +317,11 @@ object PageRank {
    * last committed superstep (kill the JVM at any point, re-run, get the
    * byte-identical final state — each superstep consumes the COMMITTED bytes
    * of the previous one, so the recomputation is exact).
+   *
+   * Same superstep plan as [[run]]; the committed state stays (id, rank).
+   * The dangling mass is observed on each commit's own write; a resumed run
+   * re-derives it once from the committed rows (an exact sum, so the same
+   * value the uninterrupted run observed).
    */
   def runResumable(
       vertices: DataFrame,
@@ -333,53 +331,42 @@ object PageRank {
       maxIter: Int = 10): Result = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val verts = vertices.select(col(vertices.columns.head).as("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = verts.count()
-    val edgeCount = edges.count()
-    // same physical shape as [[run]]: weight join hoisted out of the loop,
-    // edges pre-partitioned by src so supersteps shuffle only the rank side
-    val outDeg = edges.groupBy($"src").agg(count(lit(1)).as("deg"))
-    val edgesW = edges.join(outDeg, "src")
-      .select($"src", $"dst", (lit(1.0) / $"deg").as("w"))
-      .repartition($"src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    edgesW.count()
-    val dangling = verts.join(edges.select($"src".as("id")).distinct(),
-      Seq("id"), "left_anti").persist(StorageLevel.MEMORY_AND_DISK)
-    val danglingCount = dangling.count()
-
+    val g = setUp(vertices, edges)
+    val n = g.n
+    // commits the (id, rank) state; the metric is taken once the data
+    // files are written, so its wall includes the write
+    def commit(step: Int, frame: DataFrame)(metric: => SuperstepMetric)
+        : (DataFrame, Double, SuperstepMetric) = {
+      val (observed, mass) = Iterate.observe(frame, danglingMass)
+      val (state, r, m) =
+        log.commit(step, observed.select($"id", $"rank"), mass)(_ => metric)
+      (state, Iterate.massAt(r, 0), m)
+    }
     var iter = log.lastCompleted.getOrElse(-1)
-    var ranks =
+    var (ranks, dm) =
       if (iter < 0) {
-        val init = verts.withColumn("rank", lit(1.0 / n))
         iter = 0
-        log.commit(0, init, SuperstepMetric("pagerank", 0, n, 0L, 0L, -1.0))
-      } else log.readState()
+        val (state, mass, _) = commit(0, g.flags.select($"id",
+          lit(1.0 / n).as("rank"), $"dangling"))(
+          SuperstepMetric("pagerank", 0, n, 0L, 0L, -1.0))
+        (state, mass)
+      } else {
+        val state = log.readState()
+        (state, Iterate.massAt(state.join(g.flags, "id").agg(danglingMass).head(), 0))
+      }
     val metrics = scala.collection.mutable.ArrayBuffer[SuperstepMetric]()
     while (iter < maxIter) {
       val t0 = System.nanoTime()
-      val danglingMass =
-        if (danglingCount == 0) 0.0
-        else ranks.join(dangling, "id")
-          .agg(coalesce(sum($"rank"), lit(0.0))).as[Double].head()
-      val contribs = ranks.join(edgesW, ranks("id") === edgesW("src"))
-        .groupBy($"dst".as("id"))
-        .agg(sum($"rank" * $"w").as("contrib"))
-      val base = (1.0 - damping) / n + damping * danglingMass / n
-      val newRanks = verts.join(contribs, Seq("id"), "left")
-        .select($"id",
-          (lit(base) + lit(damping) * coalesce($"contrib", lit(0.0))).as("rank"))
       iter += 1
-      val m = SuperstepMetric("pagerank", iter, n, edgeCount,
-        (System.nanoTime() - t0) / 1000000L, -1.0)
-      ranks = log.commit(iter, newRanks, m)
+      val (state, mass, m) = commit(iter, superstepPlan(ranks, g.edgesW, g.noIn,
+          uniformTeleport(n, damping)(dm), damping))(
+        SuperstepMetric("pagerank", iter, n, g.edgeCount, Iterate.msSince(t0), -1.0))
+      ranks = state
+      dm = mass
       metrics += m
     }
     // release loop-scoped caches (ranks reads the committed table)
-    edgesW.unpersist()
-    dangling.unpersist()
-    verts.unpersist()
+    g.release()
     Result(ranks, metrics.toSeq, iter)
   }
 

@@ -1,6 +1,6 @@
 package graft.state
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 import graft.algo.SuperstepMetric
 import graft.tables.IcebergLite
@@ -42,8 +42,21 @@ class Supersteps(root: String, algo: String, spark: SparkSession) {
 
   /** Commit one superstep's state + metrics; returns the re-read state (the
     * caller continues from the COMMITTED bytes, so resumed and uninterrupted
-    * runs see identical inputs). */
-  def commit(superstep: Int, state: DataFrame, m: SuperstepMetric): DataFrame = {
+    * runs see identical inputs), read with `state`'s schema — no Parquet
+    * schema-inference job per superstep. */
+  def commit(superstep: Int, state: DataFrame, m: SuperstepMetric): DataFrame =
+    commit(superstep, state, () => Row.empty)(_ => m)._1
+
+  /** [[commit]] for a superstep whose metric needs scalars of its own
+    * state: `state` carries a `Dataset.observe` whose values `scalars`
+    * reads (see [[graft.algo.Iterate.observe]]) — the write is the action
+    * that produces them, so no second job runs over the state. `metric` is
+    * built from them once the data files are written, before the manifest
+    * commits. Returns the re-read state, the scalars and the metric. */
+  def commit(superstep: Int, state: DataFrame, scalars: () => Row)(
+      metric: Row => SuperstepMetric): (DataFrame, Row, SuperstepMetric) = {
+    lazy val r = scalars()
+    lazy val m = metric(r)
     tables.commit(state, stateTable, Map(
       "algo" -> algo,
       "superstep" -> superstep.toString,
@@ -51,7 +64,7 @@ class Supersteps(root: String, algo: String, spark: SparkSession) {
       "edgesProcessed" -> m.edgesProcessed.toString,
       "wallMs" -> m.wallMs.toString,
       "delta" -> m.delta.toString))
-    tables.read(spark, stateTable)
+    (tables.read(spark, stateTable, schema = Some(state.schema)), r, m)
   }
 
   /**
@@ -71,7 +84,8 @@ class Supersteps(root: String, algo: String, spark: SparkSession) {
       "edgesProcessed" -> m.edgesProcessed.toString,
       "wallMs" -> m.wallMs.toString,
       "delta" -> m.delta.toString))
-    (tables.read(spark, stateTable), snap.properties("appendedRows").toLong)
+    (tables.read(spark, stateTable, schema = Some(delta.schema)),
+      snap.properties("appendedRows").toLong)
   }
 
   /** Only the rows appended at `superstep` (default: the latest) — for

@@ -6,6 +6,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Missing table / snapshot — a user-input-shaped failure (wrong warehouse
   * path, never-committed table), typed so CLI boundaries can render it as a
@@ -233,9 +234,11 @@ class IcebergLite(rootDir: String) {
     * `HashPartitioning(col, n)` (manifest stats don't apply — a hash
     * column's per-file range is the whole domain; co-location IS the
     * bucketed table's pruning story). Each commit writes a fresh
-    * `data/bucketed_s<sid>` dir; appends land in the current one. */
+    * `data/bucketed_s<sid>` dir; appends land in the current one.
+    * `properties` is evaluated once the data files are written (before the
+    * manifest), so it may carry figures the write's own action produced. */
   def commit(df: DataFrame, table: String,
-      properties: Map[String, String] = Map.empty,
+      properties: => Map[String, String] = Map.empty,
       statsCol: Option[String] = None,
       bucketBy: Option[(String, Int)] = None): Snapshot = {
     val parent = currentSnapshot(table).map(_.snapshotId).getOrElse(-1L)
@@ -510,15 +513,18 @@ class IcebergLite(rootDir: String) {
     }
   }
 
-  /** Read a table at its current (or an explicit) snapshot. */
-  def read(spark: SparkSession, table: String, snapshotId: Long = -1L): DataFrame = {
+  /** Read a table at its current (or an explicit) snapshot. A known
+    * `schema` (the frame the snapshot was written from) skips Parquet's
+    * schema-inference job. */
+  def read(spark: SparkSession, table: String, snapshotId: Long = -1L,
+      schema: Option[StructType] = None): DataFrame = {
     val snap =
       if (snapshotId >= 0) readSnapshot(table, snapshotId)
         .getOrElse(throw NoSuchTable(s"no snapshot $snapshotId for $table"))
       else currentSnapshot(table)
         .getOrElse(throw NoSuchTable(s"table $table has no snapshots"))
     val paths = snap.files.map(f => tableDir(table).resolve(f).toString)
-    spark.read.parquet(paths: _*)
+    schema.fold(spark.read)(spark.read.schema(_)).parquet(paths: _*)
   }
 
   def currentSnapshot(table: String): Option[Snapshot] = {

@@ -389,4 +389,164 @@ class AlgoSpec extends SparkTestBase {
     val res = TriangleCount.run(vertsOf(3), toDs(edges))
     assert(res.globalCount == 1L)
   }
+
+  // ---- superstep scalars folded into the superstep's own action ----
+
+  /** The body's result and the number of Spark jobs it started. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    org.apache.spark.TestListenerBus.drain(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.TestListenerBus.drain(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** A fixture with dangling vertices (80..89 have no out-edges), vertices
+    * with no in-edges, and a hub. */
+  private val fixture: Seq[(Int, Int)] =
+    (randomDigraph(80, 320, seed = 71) ++ (1 until 40).map(i => (i, 0)) ++
+      (0 until 10).map(i => (i, 80 + i))).distinct
+
+  test("jobs per superstep: PageRank, LPA and CC run one action per superstep") {
+    // supersteps beyond a first run cost only their own jobs: the
+    // difference between two run lengths cancels the one-time set-up
+    def prJobs(iters: Int) = jobsOf(PageRank.run(vertsOf(90), toDs(fixture),
+      tol = 0.0, maxIter = iters).ranks.collect())._2
+    val pr = (prJobs(6) - prJobs(2)) / 4.0
+    info(s"PageRank: $pr jobs per superstep")
+    // 3 on this fixture; with the dangling mass as its own scalar subplan
+    // (broadcast + SinglePartition aggregate) a superstep runs 9
+    assert(pr <= 4.0, s"PageRank: $pr jobs per superstep")
+
+    // LPA: a long path keeps changing labels for many supersteps
+    val path = (0 until 30).map(i => (i, i + 1))
+    def lpa(iters: Int) = jobsOf {
+      val r = LabelPropagation.run(vertsOf(31), toDs(path), maxIter = iters)
+      r.labels.collect()
+      r.iterations
+    }
+    val ((i2, j2), (i5, j5)) = (lpa(2), lpa(5))
+    assert(i2 == 2 && i5 == 5, "the fixture must not converge early")
+    val perLpa = (j5 - j2) / 3.0
+    info(s"LPA: $perLpa jobs per superstep")
+    // 6 here; a changed count run as its own join + count action makes 11
+    assert(perLpa <= 7.0, s"LPA: $perLpa jobs per superstep")
+
+    // CC: a longer path needs more rounds; jobs per extra round
+    def cc(n: Int) = jobsOf {
+      val r = ConnectedComponents.run(vertsOf(n), toDs((0 until n - 1).map(i => (i, i + 1))))
+      r.components.collect()
+      r.rounds
+    }
+    val ((r1, c1), (r2, c2)) = (cc(4), cc(64))
+    assert(r2 > r1, s"rounds $r1 vs $r2")
+    val perCc = (c2 - c1).toDouble / (r2 - r1)
+    info(s"CC: $perCc jobs per round ($r1 vs $r2 rounds)")
+    // 10.5 here; a signature run as its own aggregate action makes 12.5
+    assert(perCc <= 11.0, s"CC: $perCc jobs per round")
+  }
+
+  test("observed superstep scalars equal the separate actions they replace") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{coalesce, count, expr, lit}
+    // PageRank: the observed dangling mass gives the oracle's ranks
+    val n = 90
+    val want = PageRank.oracle(n, fixture, tol = 0.0, maxIter = 10)
+    val pr = PageRank.run(vertsOf(n), toDs(fixture), tol = 0.0, maxIter = 10)
+    val got = pr.ranks.as[(Long, Double)].collect().toMap
+    assert(got.size == n && pr.iterations == 10 && pr.metrics.size == 10)
+    for (v <- 0 until n)
+      assert(math.abs(got(v.toLong) - want(v)) < 1e-6, s"rank($v)")
+
+    // LPA: the observed changed count per superstep is the number of
+    // vertices whose label the superstep changed
+    val edges = randomDigraph(60, 150, seed = 11L)
+    val lpa = LabelPropagation.run(vertsOf(60), toDs(edges), maxIter = 10)
+    val states = (0 to lpa.iterations).map(k =>
+      if (k == 0) Array.tabulate(60)(_.toLong)
+      else LabelPropagation.oracle(60, edges, maxIter = k))
+    val wantChanged = states.sliding(2).map { case Seq(a, b) =>
+      a.indices.count(i => a(i) != b(i)).toLong }.toSeq
+    assert(lpa.metrics.map(_.rowsOut) == wantChanged)
+    assert(lpa.metrics.map(_.delta) == wantChanged.map(_.toDouble))
+
+    // CC: rounds and per-round edge counts equal a loop that computes the
+    // signature with its own aggregate action
+    val ccEdges = randomDigraph(100, 120, seed = 1L)
+    val ops = new ConnectedComponents.StarOps(spark)
+    def sig(e: org.apache.spark.sql.DataFrame) = e.agg(count(lit(1)),
+      coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L))).as[(Long, Long)].head()
+    var cur = toDs(ccEdges).toDF().select($"src".as("u"), $"dst".as("v"))
+      .filter($"u" =!= $"v").distinct().localCheckpoint(true)
+    var s = sig(cur)
+    val counts = scala.collection.mutable.ArrayBuffer[Long]()
+    var done = false
+    while (!done) {
+      val next = ops.smallStar(ops.largeStar(cur)).localCheckpoint(true)
+      val ns = sig(next)
+      done = ns == s
+      cur = next; s = ns; counts += ns._1
+    }
+    val cc = ConnectedComponents.run(vertsOf(100), toDs(ccEdges))
+    assert(cc.rounds == counts.size)
+    assert(cc.metrics.map(_.rowsOut) == counts.toSeq)
+    assert(cc.metrics.map(_.delta) == Seq.fill(counts.size - 1)(1.0) :+ 0.0)
+  }
+
+  test("resumable PageRank: resuming mid-run gives the uninterrupted ranks") {
+    import spark.implicits._
+    def tmp() = java.nio.file.Files.createTempDirectory("pr-resume").toString
+    def log(dir: String) = new graft.state.Supersteps(dir, "pagerank", spark)
+    val full = PageRank.runResumable(vertsOf(90), toDs(fixture), log(tmp()), maxIter = 6)
+      .ranks.as[(Long, Double)].collect().sortBy(_._1)
+    val want = PageRank.oracle(90, fixture, tol = 0.0, maxIter = 6)
+    assert(full.length == 90)
+    full.foreach { case (v, r) => assert(math.abs(r - want(v.toInt)) < 1e-6, s"rank($v)") }
+    for (cut <- Seq(1, 4)) {
+      val dir = tmp()
+      PageRank.runResumable(vertsOf(90), toDs(fixture), log(dir), maxIter = cut)
+      val resumed = PageRank.runResumable(vertsOf(90), toDs(fixture), log(dir),
+        maxIter = 6)
+      assert(resumed.iterations == 6 && resumed.metrics.map(_.superstep) == (cut + 1 to 6))
+      val got = resumed.ranks.as[(Long, Double)].collect().sortBy(_._1)
+      assert(got.map(_._1).toSeq == full.map(_._1).toSeq)
+      got.zip(full).foreach { case ((v, a), (_, b)) =>
+        assert(java.lang.Double.doubleToLongBits(a) == java.lang.Double.doubleToLongBits(b),
+          s"cut $cut, vertex $v: $a vs $b")
+      }
+    }
+  }
+
+  test("PageRank and HITS reject an edge whose endpoint is not a vertex") {
+    // vertex 5 is missing from the vertex set: unchecked, an edge to it
+    // comes back as an extra ranked row
+    val edges = Seq((0, 1), (1, 2), (2, 0), (2, 5))
+    val verts = vertsOf(5).filter("id != 5")
+    val reversed = Seq((5, 0), (0, 1), (1, 0))
+    def rejects(what: String)(body: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](body)
+      assert(e.getMessage.contains("outside the vertex set"), s"$what: ${e.getMessage}")
+    }
+    rejects("run")(PageRank.run(verts, toDs(edges), tol = 0.0, maxIter = 3).ranks.collect())
+    rejects("run, source side")(PageRank.run(verts, toDs(reversed), maxIter = 3))
+    rejects("personalized")(PageRank.personalized(verts, toDs(edges), Seq(0L), maxIter = 3))
+    rejects("warmStart")(PageRank.warmStart(verts, toDs(edges),
+      vertsOf(4).withColumn("rank", org.apache.spark.sql.functions.lit(0.25))))
+    val dir = java.nio.file.Files.createTempDirectory("pr-contract").toString
+    rejects("runResumable")(PageRank.runResumable(verts, toDs(edges),
+      new graft.state.Supersteps(dir, "pagerank", spark), maxIter = 2))
+    rejects("hits")(Hits.run(verts, toDs(edges), maxIter = 2))
+    rejects("hits resumable")(Hits.runResumable(verts, toDs(edges),
+      new graft.state.Supersteps(dir, "hits", spark), maxIter = 2))
+    // in-contract graphs are unaffected
+    assert(PageRank.run(vertsOf(3), toDs(edges.take(3)), maxIter = 3).ranks.count() == 3)
+  }
 }

@@ -76,4 +76,34 @@ class BfsSpec extends SparkTestBase {
     val p2 = Bfs.shortestPath(out, in, 1L, 40L)
     assert(p1 == p2)
   }
+
+  test("shortestPath: unreachable target on a 200-deep path keeps the visited plan bounded") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // path 0 -> 1 -> ... -> 200; the target 1000 is isolated, so no meeting
+    // ever bounds the search: the forward side (the smaller frontier, ties
+    // forward) walks the whole path before it drains
+    val depth = 200
+    val edgeSeq = (0 until depth).map(i => (i.toLong, i + 1L))
+    val out = spark.createDataset(edgeSeq.map(e => Edge(e._1, e._2)))
+    val in = spark.createDataset(edgeSeq.map(e => Edge(e._2, e._1)))
+    // Dataset.union flattens nested unions, so a visited set that is never
+    // collapsed grows as one more unioned delta (a plan leaf) per superstep,
+    // and every superstep's anti-join re-analyzes all of them
+    val widest = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        widest.accumulateAndGet(qe.analyzed.collectLeaves().size, math.max)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(Bfs.shortestPath(out, in, 0L, 1000L).isEmpty)
+      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    // collapsing every 32 levels bounds every plan the search runs
+    assert(widest.get > 0 && widest.get < 64,
+      s"largest analyzed plan: ${widest.get} leaves")
+  }
 }
